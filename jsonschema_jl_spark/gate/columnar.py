@@ -26,8 +26,9 @@ batches columnar-ly:
 Soundness contract, both directions: the screen may only declare a row
 valid (resp. invalid) when the exact validator would — any ambiguity
 (parse surprises, unhandled column types, absent-vs-null when the two
-verdicts differ, numeric magnitude beyond float64's exact-integer range,
-enum corner cases) routes the row (or whole batch) to the dict walk.  The
+verdicts differ, numeric magnitude beyond float64's exact-integer range
+under a keyword that compares magnitudes, enum corner cases) routes the
+row (or whole batch) to the dict walk.  The
 invalid mask is only consumed where the caller needs no issue detail; a
 certainly-invalid bit requires a DEFINITIVE keyword failure (wrong-typed
 present value, out-of-range number, length/pattern/enum miss, a required
@@ -41,10 +42,21 @@ dedicated screen-vs-walk differentials (tests/test_gate_columnar.py, both
 modes) guard.
 
 Known pyarrow.json behaviors relied on (probed on pyarrow 16, see tests):
-  * duplicate keys, mixed-type columns, non-object rows, >double numbers,
-    blank interior lines -> batch-level ArrowInvalid => full fallback;
-  * ints beyond int64 silently become double => the +-2^53 magnitude gate
-    refuses to screen such columns;
+  * duplicate keys, mixed-type columns, truncated rows, >double numbers
+    -> batch-level ArrowInvalid.  The screen then sets aside the rows a
+    raw-text probe flags (no closing `}`, a repeated or minority-kind value
+    for a planned top-level key, a non-JSON-standard value such as NaN),
+    walks those, and re-parses the rest once; only when that re-parse fails
+    too (a conflict the probe cannot see: nested, in an unplanned key, or
+    beyond double range) does the whole batch fall back to the walk.
+    Non-object and multi-line rows never enter the parse;
+  * ints beyond int64 silently become double (exactly the float64 that
+    Python's float() gives the same int) => `type` checks stay exact (an
+    integral, finite double is an integer), and the +-2^53 magnitude gate
+    refuses the column only under keywords that compare magnitudes
+    (minimum / maximum / exclusive* / multipleOf / numeric enum or const);
+  * NaN / Infinity literals parse to double NaN / inf, and fail
+    `type: integer` here as in the walk;
   * ISO-date-like strings are inferred as timestamp => the original JSON
     value WAS a string, so type/length/pattern can't be judged from the
     inferred column => fallback;
@@ -59,6 +71,7 @@ Known pyarrow.json behaviors relied on (probed on pyarrow 16, see tests):
 from __future__ import annotations
 
 import io
+import json
 import re
 from typing import Any
 
@@ -146,6 +159,28 @@ def _null_invalid(sub: dict) -> bool:
         if branch in sub and _null_invalid(sub[branch]):
             return True
     return False
+
+
+_MAGNITUDE_KW = (
+    "minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum", "multipleOf",
+)
+
+
+def _compares_magnitude(sub: dict) -> bool:
+    """Does a screenable scalar subschema (or any combinator member) run a
+    check that compares a number's magnitude through float64?  Only those
+    need the +-2^53 exact-integer gate: `type` alone reads the parsed
+    column's type, which is exact at any magnitude."""
+    if any(k in sub for k in _MAGNITUDE_KW):
+        return True
+    allowed = _enum_of(sub)
+    if allowed is not None and any(
+        isinstance(e, (int, float)) and not isinstance(e, bool) for e in allowed
+    ):
+        return True
+    members = [*sub.get("allOf", ()), *sub.get("anyOf", ()), *sub.get("oneOf", ())]
+    members += [sub[k] for k in ("not", "if", "then", "else") if k in sub]
+    return any(_compares_magnitude(m) for m in members)
 
 
 def _plan_scalar(sub: dict) -> bool:
@@ -579,13 +614,19 @@ def _scalar_masks(
     `sub`.  Bits are set only for PRESENT (non-null) values — null slots are
     judged by the caller, which knows whether null means absent-or-null (a
     column cell) or a genuine JSON null (a list element).  Returns None when
-    the whole batch must fall back (numbers beyond the float64-exact range,
-    timestamp-inferred strings).  `nullm` lets a caller that already
-    materialized arr's null bitmap share it, and `arrf` an already-gated
-    float64 cast of a numeric arr (the ±2^53 magnitude gate must have run),
-    so combinator members don't re-scan the column per member — one
-    full-column pass saved per property (and per member) per batch on the
-    dynamic gate's hot path."""
+    the whole batch must fall back: timestamp-inferred strings, or numbers
+    beyond the float64-exact range (±2^53) when `sub` or a combinator member
+    compares magnitudes (minimum / maximum / exclusive* / multipleOf /
+    numeric enum or const — see _compares_magnitude).  A `type`-only check
+    screens numbers of any magnitude: an int64 column holds integers, and a
+    double column (including ints beyond int64, which pyarrow reads as
+    double) is an integer exactly where the value is finite and integral,
+    as in the walk.  `nullm` lets a caller that already materialized arr's
+    null bitmap share it, and `arrf` an already-gated float64 cast of a
+    numeric arr (the ±2^53 magnitude gate must have run), so combinator
+    members don't re-scan the column per member — one full-column pass
+    saved per property (and per member) per batch on the dynamic gate's
+    hot path."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -632,7 +673,7 @@ def _scalar_masks(
         return None  # unexpected inference — walk
     bad = np.zeros(m, dtype=bool)
 
-    if is_num and arrf is None:
+    if is_num and arrf is None and _compares_magnitude(sub):
         # exact-integer range gate: ints beyond 2^53 (or doubles pyarrow
         # silently demoted huge JSON ints into) can't be compared exactly
         mm = pc.min_max(arr).as_py()
@@ -649,9 +690,11 @@ def _scalar_masks(
             if "number" in types:
                 pass
             elif "integer" in types:
-                # float with integral value counts as integer (walk parity)
+                # finite float with integral value counts as integer (walk
+                # parity); NaN fails the equality, ±inf the finiteness
                 if pa.types.is_floating(t):
                     bad |= _to_np(pc.not_equal(arr, pc.floor(arr)))
+                    bad |= ~_to_np(pc.is_finite(arr))
             else:
                 bad |= present
         elif is_str:
@@ -709,9 +752,15 @@ def _scalar_masks(
                 float(e) for e in allowed
                 if isinstance(e, (int, float)) and not isinstance(e, bool)
             ]
-            bad |= ~_to_np(
-                pc.is_in(arrf, value_set=pa.array(nums, pa.float64()))
-            )
+            if nums:  # numeric entries make _compares_magnitude gate arrf
+                # `+ 0.0` maps -0.0 to 0.0 on both sides: is_in hashes the
+                # two zeros apart, json_equal (0 == -0.0) does not
+                bad |= ~_to_np(pc.is_in(
+                    pc.add(arrf, 0.0),
+                    value_set=pa.array([x + 0.0 for x in nums], pa.float64()),
+                ))
+            else:
+                bad |= present
         elif is_str:
             strs = [e for e in allowed if isinstance(e, str)]
             bad |= ~_to_np(pc.is_in(arr, value_set=pa.array(strs, t)))
@@ -880,8 +929,7 @@ def _array_masks(
         et = vals.type
         # primitive elements only: nested lists/dicts are unhashable for
         # the dup scan, and timestamp-inferred elements would equate
-        # distinct source strings; ints beyond 2^53 would collide after
-        # the pandas float upcast of a nullable int column
+        # distinct source strings
         if not (
             pa.types.is_floating(et) or pa.types.is_string(et)
             or pa.types.is_large_string(et) or pa.types.is_boolean(et)
@@ -889,16 +937,17 @@ def _array_masks(
         ):
             return None
         if pa.types.is_integer(et):
-            mm = pc.min_max(vals).as_py()
-            if mm["min"] is not None and (
-                abs(mm["min"]) > _MAX_EXACT or abs(mm["max"]) > _MAX_EXACT
-            ):
-                return None
+            # the walk's uniqueness key is float(v) (validator._canon_key):
+            # compare the same float64, so ints beyond 2^53 collide exactly
+            # where the walk's keys do
+            vals = pc.cast(vals, pa.float64(), safe=False)
         # per-row duplicate scan; pandas equality matches the walk's
         # json_equal on a single-typed column (2 == 2.0, null == null;
-        # bool-vs-number mixes can't share one parsed column)
+        # bool-vs-number mixes can't share one parsed column).  The null
+        # bit is part of the key: pandas reads a null slot of a double
+        # column as NaN, which a NaN element must not equal
         dup = pd.DataFrame(
-            {"r": rows, "v": vals.to_pandas().to_numpy()}
+            {"r": rows, "z": vals_null, "v": vals.to_pandas().to_numpy()}
         ).duplicated().to_numpy()
         bad |= (np.bincount(rows[dup], minlength=m) > 0) & present
     return bad, amb
@@ -979,10 +1028,139 @@ def screen_batch(
     the same instance independently) — or a ("top", conj, ops) tuple whose
     ops add anyOf/oneOf/not/if-then-else steps, each combined from BOTH
     mask directions of its member plans (see plan_screen_conj's table);
-    any ambiguity leaves both bits clear (the row walks)."""
-    import pyarrow as pa
+    any ambiguity leaves both bits clear (the row walks).
+
+    Rows the parse cannot take — non-object or multi-line rows, and when the
+    batch as a whole does not parse, the rows _probe_set_aside flags — are
+    left out of the parse and walk; see _screen_batch."""
+    res = _screen_batch(raws, plan)
+    return None if res is None else res[:2]
+
+
+def _read_json(blob: bytes):
+    """The newline-delimited JSON `blob` as a pyarrow Table, or None when
+    pyarrow refuses it (a fallback to the walk is always sound, so any
+    reader failure counts as a refusal)."""
     from pyarrow import json as pajson
 
+    try:
+        return pajson.read_json(
+            io.BytesIO(blob),
+            # use_threads=False: Spark's forked python workers inherit a
+            # parent-process pyarrow thread pool that is unusable post-fork
+            # (worker crash, observed as executor EOFException); the batch
+            # is one task's slice anyway, so intra-read parallelism would
+            # only fight the executor's task parallelism
+            read_options=pajson.ReadOptions(use_threads=False),
+            parse_options=pajson.ParseOptions(newlines_in_values=False),
+        )
+    except Exception:
+        return None
+
+
+def _plan_keys(plan) -> set:
+    """Every top-level property name a screening plan checks: its
+    property plans, combinator members and dependency schemas."""
+    if plan is None:
+        return set()
+    if isinstance(plan, dict):
+        keys = {k for k in plan if k is not _EXTRAS}
+        for _, (kind, payload) in plan.get(_EXTRAS, {}).get("deps", ()):
+            if kind == "schema":
+                keys |= _plan_keys(payload)
+        return keys
+    if isinstance(plan, tuple) and plan[0] == "top":
+        keys = _plan_keys(plan[1])
+        for op in plan[2]:
+            for part in op[1:]:
+                keys |= _plan_keys(part)
+        return keys
+    return set().union(*(_plan_keys(p) for p in plan))
+
+
+# value kinds the probe tells apart by a value's first byte: pyarrow types
+# a column by the first non-null kind it meets and refuses a batch where a
+# later row brings another (int and float are one kind, `number`).
+# _K_OTHER covers bytes no standard JSON value starts with — NaN /
+# Infinity literals and garbage — which always walk.
+_K_OTHER, _K_NULL, _K_NUMBER = 0, 1, 6
+_VALUE_KIND = np.zeros(256, dtype=np.uint8)
+for _byte, _kind in (("n", _K_NULL), ('"', 2), ("t", 3), ("f", 3), ("[", 4),
+                     ("{", 5), *((d, _K_NUMBER) for d in "-0123456789")):
+    _VALUE_KIND[ord(_byte)] = _kind
+_IS_DIGIT = np.zeros(256, dtype=bool)
+_IS_DIGIT[ord("0"):ord("9") + 1] = True
+
+
+def _probe_set_aside(enc: list, blob: bytes, keys) -> np.ndarray:
+    """Rows of a batch that pyarrow refused as a whole which a raw-text
+    probe (one byte scan, no parse) says keep it from parsing: no closing
+    `}`, a planned top-level key written twice, or a planned key whose value
+    is a non-standard literal or of a kind other than the batch's majority
+    kind for that key (null mixes with every kind).  `blob` is `enc`, the
+    rows' UTF-8 bytes, joined by newlines.
+
+    The probe only steers which rows the re-parse sees; soundness never
+    rests on it.  A key it misreads (an escaped key, a nested object using
+    the same name) costs a needless walk or a failed re-parse, which falls
+    back to the whole-batch walk as before."""
+    n = len(enc)
+    b = np.frombuffer(blob, dtype=np.uint8)
+    last = len(b) - 1
+    lens = np.fromiter(map(len, enc), dtype=np.int64, count=n)
+    ends = np.cumsum(lens + 1) - 1  # each row's newline (len(b) for the last)
+    aside = b[ends - 1] != ord("}")
+    keys = list(keys)
+    # key candidates: a closing quote, at most one blank, a colon (other
+    # layouts read as no key, or as an odd value kind: both only walk)
+    colon = np.flatnonzero(b == ord(":"))
+    q = np.maximum(colon - 1, 1)
+    q -= b[q] == ord(" ")
+    keyish = b[q] == ord('"')
+    colon, q = colon[keyish], q[keyish]
+    key_tail = b[q - 1]
+    # which planned key each candidate is (-1: none), by a literal search
+    # from the key's last byte backwards: the first compare runs over every
+    # candidate, the rest over the survivors
+    kid = np.full(len(q), -1, dtype=np.int64)
+    for i, key in enumerate(keys):
+        lit = json.dumps(key, ensure_ascii=False).encode("utf-8")
+        m = len(lit)
+        sel = np.flatnonzero((key_tail == lit[-2]) & (q >= m - 1))
+        for j in range(2, m):
+            sel = sel[b[q[sel] - j] == lit[m - 1 - j]]
+        kid[sel] = i
+    hit = kid >= 0
+    colon, kid = colon[hit], kid[hit]
+    # one (key, row) cell per occurrence: a repeated cell is a duplicate key
+    cell = kid * n + np.searchsorted(ends, colon)
+    p = np.minimum(colon + 1, last)
+    p = np.minimum(p + (b[p] == ord(" ")), last)
+    first = b[p]
+    kind = _VALUE_KIND[first]
+    # "-" starts a number only before a digit (not "-Infinity")
+    neg = np.flatnonzero(first == ord("-"))
+    kind[neg[~_IS_DIGIT[b[np.minimum(p[neg] + 1, last)]]]] = _K_OTHER
+    count = np.bincount(cell, minlength=len(keys) * n)
+    aside |= (count.reshape(len(keys), n) > 1).any(axis=0)
+    once = count[cell] == 1
+    cell, kid, kind = cell[once], kid[once], kind[once]
+    # per key, the kind most rows carry; null mixes with every kind
+    tally = np.bincount(kid * 8 + kind, minlength=len(keys) * 8).reshape(-1, 8)
+    major = tally[:, _K_NULL + 1:].argmax(axis=1) + _K_NULL + 1
+    odd = (kind == _K_OTHER) | ((kind != _K_NULL) & (kind != major[kid]))
+    aside[cell[odd] % n] = True
+    return aside
+
+
+def _screen_batch(
+    raws: pd.Series, plan: dict | list | tuple
+) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """screen_batch's masks plus a third, `parsed`: the rows the columnar
+    parse covered.  Every other row is in neither mask and walks — rows
+    the line-oriented reader cannot take, and, when the batch does not
+    parse as a whole, the rows _probe_set_aside flags.  The rest re-parse
+    once; a refusal then (a conflict the probe cannot see) returns None."""
     n = len(raws)
     vals = raws.to_numpy(dtype=object)
     # rows screenable by the line-oriented reader: non-null single-line
@@ -1002,25 +1180,29 @@ def screen_batch(
     )
     out = np.zeros(n, dtype=bool)
     inv_out = np.zeros(n, dtype=bool)
+    parsed = np.zeros(n, dtype=bool)
     idx = np.flatnonzero(screenable)
     if idx.size == 0:
-        return out, inv_out
+        return out, inv_out, parsed
     try:
-        blob = "\n".join(vals[i] for i in idx).encode("utf-8")
-        tbl = pajson.read_json(
-            io.BytesIO(blob),
-            # use_threads=False: Spark's forked python workers inherit a
-            # parent-process pyarrow thread pool that is unusable post-fork
-            # (worker crash, observed as executor EOFException); the batch
-            # is one task's slice anyway, so intra-read parallelism would
-            # only fight the executor's task parallelism
-            read_options=pajson.ReadOptions(use_threads=False),
-            parse_options=pajson.ParseOptions(newlines_in_values=False),
-        )
-    except Exception:
+        enc = [vals[i].encode("utf-8") for i in idx]
+    except UnicodeEncodeError:  # lone surrogates: json.loads judges them
         return None
+    blob = b"\n".join(enc)
+    tbl = _read_json(blob)
+    if tbl is None:
+        keep = ~_probe_set_aside(enc, blob, _plan_keys(plan))
+        if keep.all():
+            return None  # nothing to set aside: the re-parse would fail too
+        idx = idx[keep]
+        if idx.size == 0:
+            return out, inv_out, parsed
+        tbl = _read_json(b"\n".join([e for e, k in zip(enc, keep) if k]))
+        if tbl is None:
+            return None
     if tbl.num_rows != idx.size:
         return None
+    parsed[idx] = True
 
     if isinstance(plan, tuple) and plan and plan[0] == "top":
         _, conj, ops = plan
@@ -1085,7 +1267,7 @@ def screen_batch(
 
     out[idx] = ok
     inv_out[idx] = inv
-    return out, inv_out
+    return out, inv_out, parsed
 
 
 def _plan_masks(

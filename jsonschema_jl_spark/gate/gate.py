@@ -77,13 +77,19 @@ class GateMetrics:
         m = GateMetrics(spark)
         gate_filter(df, schema, json_col="props", metrics=m).count()
         m.as_dict()  # {'screened_valid': ..., 'screened_invalid': ...,
-                     #  'walked': ..., 'fallback_rows': ..., 'screen_rate': ...}
+                     #  'walked': ..., 'fallback_rows': ..., 'isolated': ...,
+                     #  'screen_rate': ...}
 
     screened_valid / screened_invalid are rows the columnar screen decided
     without the per-row dict walk (invalid only counts in verdict-only
     consumers like gate_filter); walked are rows that ran the exact walk;
     fallback_rows are rows of batches the screen refused entirely (a subset
-    of walked).  The native typed-column gate has no Python stage, so these
+    of walked); isolated are rows the screen left out of the columnar parse
+    of a batch it did screen — non-object or multi-line rows, and rows its
+    raw-text probe set aside so the rest of the batch could parse (a subset
+    of walked, disjoint from fallback_rows).  A batch sliding back to the
+    whole-batch fallback moves its rows from isolated/screened into
+    fallback_rows.  The native typed-column gate has no Python stage, so these
     counters stay zero there — the screen is the DYNAMIC gate's multiplier
     and this is the regression signal for it (VERDICT round-3 ask #4).
 
@@ -98,6 +104,7 @@ class GateMetrics:
         self.screened_invalid = sc.accumulator(0)
         self.walked = sc.accumulator(0)
         self.fallback_rows = sc.accumulator(0)
+        self.isolated = sc.accumulator(0)
 
     def as_dict(self) -> dict:
         sv = self.screened_valid.value
@@ -109,6 +116,7 @@ class GateMetrics:
             "screened_invalid": si,
             "walked": w,
             "fallback_rows": self.fallback_rows.value,
+            "isolated": self.isolated.value,
             "screen_rate": round((sv + si) / total, 4) if total else None,
         }
 
@@ -122,14 +130,15 @@ def _gate_rows(
     proven CERTAINLY VALID skip the per-row walk entirely; with
     verdict_only=True (gate_filter: the issue struct is dropped), rows
     proven CERTAINLY INVALID skip it too, receiving a placeholder issue.
-    All remaining rows (and whole batches the screen cannot vouch for) run
-    the exact dict-tree walk — see gate/columnar.py for the two-sided
-    soundness contract."""
+    All remaining rows — those the screen left undecided or set aside from
+    its parse, and whole batches it cannot vouch for — run the exact
+    dict-tree walk; see gate/columnar.py for the two-sided soundness
+    contract."""
     import numpy as np
 
-    from jsonschema_jl_spark.gate.columnar import screen_batch
+    from jsonschema_jl_spark.gate.columnar import _screen_batch
 
-    masks = screen_batch(s, plan) if plan is not None else None
+    masks = _screen_batch(s, plan) if plan is not None else None
     n = len(s)
     vals = s.to_numpy(dtype=object)
     cols = {f: np.full(n, None, dtype=object) for f in _ISSUE_FIELDS}
@@ -139,7 +148,7 @@ def _gate_rows(
             metrics.fallback_rows.add(n)
             metrics.walked.add(n)
     else:
-        certainly_valid, certainly_invalid = masks
+        certainly_valid, certainly_invalid, parsed = masks
         if verdict_only:
             walk_idx = np.flatnonzero(~(certainly_valid | certainly_invalid))
             for i in np.flatnonzero(certainly_invalid):
@@ -152,6 +161,7 @@ def _gate_rows(
         if metrics is not None:
             metrics.screened_valid.add(int(certainly_valid.sum()))
             metrics.walked.add(int(len(walk_idx)))
+            metrics.isolated.add(int(n - parsed.sum()))
     for i in walk_idx:
         raw = vals[i]
         if raw is None:
@@ -259,7 +269,17 @@ def gate_filter(
     predicates; residual schemas get a native necessary-condition prefilter
     before the pandas-UDF verdict.
 
-    Dynamic mode (`json_col`): `dynamic_native=True` opts into the
+    Dynamic mode (`json_col`) runs the columnar screen by default
+    (gate/columnar.py): each Arrow batch is parsed once by pyarrow, and rows
+    it proves valid or invalid skip the per-row walk.  Rows pyarrow cannot
+    parse together with the rest of their batch — malformed JSON, a value
+    whose kind differs from the batch's for a schema key, NaN / Infinity
+    literals, duplicate keys — are set aside to the exact walk on their
+    own; only a batch whose remainder still fails to parse walks whole.
+    Integers beyond 2^53 (even beyond int64) screen under `type`, and send
+    their batch to the walk only under keywords that compare magnitudes.
+
+    `dynamic_native=True` opts into the
     zero-Python variant backend (gate/dynamic_native.py) for flat scalar
     object schemas — `try_parse_json` + variant keyword predicates entirely
     in Catalyst, with only variant-refused rows (malformed / duplicate-key

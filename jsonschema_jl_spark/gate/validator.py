@@ -25,6 +25,7 @@ Deliberate reference quirks reproduced exactly:
 
 from __future__ import annotations
 
+import functools
 import math
 import re
 from dataclasses import dataclass
@@ -133,15 +134,23 @@ def _validate(x: Any, schema: Any, path: str) -> Issue | None:
         return None if schema else Issue(x, path, "schema", schema)
     if not isinstance(schema, dict):
         return None
-    keys = sorted(schema.keys(), key=lambda k: _KEYWORD_RANK.get(k, len(_KEYWORD_ORDER)))
-    for k in keys:
-        handler = _HANDLERS.get(k)
-        if handler is None:
-            continue  # unknown keyword -> no-op (src/validation.jl:114)
+    for k, handler in _keyword_plan(tuple(schema)):
         ret = handler(x, schema, schema[k], path)
         if ret is not None:
             return ret
     return None
+
+
+@functools.lru_cache(maxsize=4096)
+def _keyword_plan(keys: tuple) -> tuple:
+    """(keyword, handler) pairs of a schema node with keys `keys`, in
+    canonical order; unknown keywords are dropped (no-ops,
+    src/validation.jl:114).  Memoized on the key tuple, not on the node:
+    the order is a function of the keys alone, so an entry can never go
+    stale when a schema changes, and the cache holds only key strings,
+    never schemas."""
+    known = sorted((k for k in keys if k in _HANDLERS), key=_KEYWORD_RANK.__getitem__)
+    return tuple((k, _HANDLERS[k]) for k in known)
 
 
 def _chase_refs(schema: Any) -> Any:

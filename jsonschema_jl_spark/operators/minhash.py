@@ -142,18 +142,6 @@ def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def minhash_np(shingles: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Signature for one shingle set: min over (a*x+b) per permutation."""
-    sh = shingles.astype(np.uint64)
-    # (P, S) intermediate chunked over permutations to bound memory
-    out = np.empty(a.size, dtype=np.uint64)
-    step = 32
-    for i in range(0, a.size, step):
-        h = a[i : i + step, None] * sh[None, :] + b[i : i + step, None]
-        out[i : i + step] = h.min(axis=1)
-    return out
-
-
 _EMPTY = np.uint64(0xFFFFFFFFFFFFFFFF)
 _HOP = np.uint64(0x9E37)  # densification hop offset; values are 63-bit so
                           # accumulated hops can never collide with _EMPTY
@@ -164,15 +152,6 @@ def _splitmix(z: np.ndarray) -> np.ndarray:
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
-
-
-def _oph_signatures(sets: list[np.ndarray], cfg: DedupConfig) -> np.ndarray:
-    """OPH over explicit per-row shingle sets (keep_shingles path)."""
-    n = len(sets)
-    lens = np.fromiter((s.size for s in sets), dtype=np.int64, count=n)
-    flat = np.concatenate(sets).astype(np.uint64)
-    row = np.repeat(np.arange(n, dtype=np.int64), lens)
-    return _oph_signatures_flat(flat, row, n, cfg)
 
 
 def _oph_signatures_flat(

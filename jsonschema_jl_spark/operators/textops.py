@@ -175,15 +175,3 @@ def _simhash_votes(col: Column) -> Column:
 
         _VOTES_UDF = votes
     return _VOTES_UDF(col)
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(c))
-        .withColumn("punct_ratio", F.round(punct_ratio(c), 6))
-        .withColumn("stopword_ratio", F.round(stopword_ratio(c), 6))
-        .withColumn("quality", quality_score(c))
-        .withColumn("lang_pred", lang_id(c))
-        .withColumn("fingerprint", fingerprint(c))
-    )

@@ -67,9 +67,10 @@ def test_plan_ineligible_or_required_walks(schema):
     assert masks is None or (len(masks[0]) == 3 and len(masks[1]) == 3)
 
 
-# per-JSON-type value pools: a batch picks ONE pool per field (pyarrow
-# unifies column types across rows — mixed types abort the whole batch, so
-# homogeneous batches are the ones that actually engage the screen)
+# per-JSON-type value pools: a batch picks ONE pool per field, so every row
+# of a batch parses into one column type and the whole batch engages the
+# screen (rows of a minority kind would be set aside to the walk; the
+# hypothesis test below draws kinds per row to cover that)
 _POOLS = {
     "int": [0, 1, 7, 10, 42, 90, 91, -1, 3],
     "float": [3.0, 2.5, 100.5, 99.9, -0.5, 7.0, 10.0, 90.0],
@@ -1390,17 +1391,33 @@ def test_gate_metrics_accumulators(spark):
     assert d2["screened_valid"] == 81 and d2["screened_invalid"] == 0
     assert d2["walked"] == 119
 
-    # a row that LOOKS like an object but fails to parse poisons its whole
-    # Arrow batch into fallback: those rows (bad + innocent batchmates) all
-    # walk and are counted as fallback_rows
-    poisoned = spark.createDataFrame(
+    # a row that LOOKS like an object but is truncated is set aside from its
+    # batch's parse: it alone walks (counted as isolated), its batchmates
+    # still screen
+    truncated = spark.createDataFrame(
         [(json.dumps({"k": k}),) for k in range(200)] + [("{not json",)] * 8,
         "props string",
     )
+    m4 = GateMetrics(spark)
+    assert gate_filter(truncated, FLAT, json_col="props", metrics=m4).count() == 81
+    d4 = m4.as_dict()
+    assert d4["walked"] == 8 and d4["isolated"] == 8 and d4["fallback_rows"] == 0
+    assert d4["screened_valid"] == 81 and d4["screened_invalid"] == 119
+
+    # a conflict the raw-text probe cannot see (a mixed list under a key the
+    # schema never mentions) poisons its whole Arrow batch into fallback:
+    # those rows (bad + innocent batchmates) all walk and are counted as
+    # fallback_rows
+    poisoned = spark.createDataFrame(
+        [(json.dumps({"k": k}),) for k in range(200)]
+        + [('{"k": 50, "x": [1, "a"]}',)] * 8,
+        "props string",
+    )
     m3 = GateMetrics(spark)
-    assert gate_filter(poisoned, FLAT, json_col="props", metrics=m3).count() == 81
+    assert gate_filter(poisoned, FLAT, json_col="props", metrics=m3).count() == 89
     d3 = m3.as_dict()
     assert d3["walked"] >= 8 and d3["fallback_rows"] == d3["walked"]
+    assert d3["isolated"] == 0
     assert d3["screened_valid"] + d3["screened_invalid"] + d3["walked"] == 208
 
 
@@ -1437,6 +1454,12 @@ _H_VALUES = st.one_of(
 
 @st.composite
 def _h_subschema(draw):
+    if draw(st.integers(min_value=0, max_value=4)) == 0:
+        # type-only numeric subschemas screen numbers of any magnitude (no
+        # ±2^53 gate); the keyword draws below cover minimum/enum with it
+        return {"type": draw(st.sampled_from(
+            ["integer", "number", ["integer", "null"], ["number", "string"]]
+        ))}
     sub: dict = {}
     t = draw(st.sampled_from(
         [None, "integer", "number", "string", "boolean", "array", "object",
@@ -1506,14 +1529,44 @@ def _h_case(draw):
     if req:
         schema["required"] = req
     rows = draw(st.lists(
-        st.dictionaries(st.sampled_from(names + ["other"]), _H_VALUES,
-                        max_size=4),
+        _h_row(names),
         min_size=1, max_size=12,
     ))
     return schema, rows
 
 
-@settings(max_examples=150, deadline=None)
+# row values beyond the schema-side scalars: integers in 2^53..2^64 (past
+# float64's exact range, past int64 from 2^63) and the NaN / Infinity
+# literals json.dumps writes for non-finite floats
+_H_ROW_VALUES = st.one_of(
+    _H_VALUES,
+    st.integers(min_value=2 ** 53, max_value=2 ** 64 - 1),
+    st.sampled_from([float("nan"), float("inf"), float("-inf")]),
+)
+
+
+@st.composite
+def _h_row(draw, names):
+    """One batch row as JSON text.  Every row draws its own values (and so
+    its own value kinds), so rows of one batch mix kinds per key; a few rows
+    are truncated, non-object, or repeat a key."""
+    obj = draw(st.dictionaries(st.sampled_from(names + ["other"]),
+                               _H_ROW_VALUES, max_size=4))
+    text = json.dumps(obj)
+    shape = draw(st.sampled_from(
+        ["object"] * 7 + ["truncated", "non-object", "duplicate-key"]
+    ))
+    if shape == "truncated":
+        return text[:draw(st.integers(min_value=1, max_value=len(text) - 1))]
+    if shape == "non-object":
+        return draw(st.sampled_from(["[1, 2]", "3", "null", '"s"', "true"]))
+    if shape == "duplicate-key":
+        first = '"%s": %s' % (names[0], json.dumps(draw(_H_ROW_VALUES)))
+        return "{%s, %s" % (first, text[1:]) if obj else "{%s, %s}" % (first, first)
+    return text
+
+
+@settings(max_examples=200, deadline=None)
 @given(_h_case())
 def test_screen_soundness_hypothesis(case):
     schema, rows = case
@@ -1521,16 +1574,25 @@ def test_screen_soundness_hypothesis(case):
     plan = plan_screen(data)  # must never raise, screenable or not
     if plan is None:
         return
-    s = pd.Series([json.dumps(r) for r in rows], dtype=object)
+    s = pd.Series(rows, dtype=object)
+    walk = _gate_rows(s, data, None)
+    walk_valid = walk["reason"].isna().to_numpy()
+    # the full gate (screen + set-aside + walk) reproduces the walk exactly,
+    # issue detail included, and verdict-only mode its verdicts
+    pd.testing.assert_frame_equal(_gate_rows(s, data, plan), walk)
+    fast = _gate_rows(s, data, plan, verdict_only=True)
+    assert (fast["reason"].isna().to_numpy() == walk_valid).all(), (schema, rows)
     masks = screen_batch(s, plan)
     if masks is None:
-        return
+        return  # the whole batch walks: sound by construction
     valid, invalid = masks
     assert not (valid & invalid).any()
     for i in np.flatnonzero(valid):
-        assert _issue_record(rows[i], data) is None, (schema, rows[i])
+        assert _issue_record(json.loads(rows[i]), data) is None, (schema, rows[i])
+        assert walk_valid[i], (schema, rows[i])
     for i in np.flatnonzero(invalid):
-        assert _issue_record(rows[i], data) is not None, (schema, rows[i])
+        assert _issue_record(json.loads(rows[i]), data) is not None, (schema, rows[i])
+        assert not walk_valid[i], (schema, rows[i])
 
 
 # ---------------------------------------------------------------------------
@@ -1645,3 +1707,147 @@ def test_deep_enum_verdicts_exact():
     pd.testing.assert_frame_equal(fast, slow)
     for (doc, want_valid), reason in zip(rows, fast["reason"].tolist()):
         assert (reason is None) == want_valid, (doc, reason)
+
+
+# ---------------------------------------------------------------------------
+# row-level set-aside: a batch pyarrow refuses as a whole still screens; the
+# rows a raw-text probe flags walk on their own
+# ---------------------------------------------------------------------------
+
+# planted defect -> is the row one the probe must set aside from the parse?
+_IMAGE_DEFECTS = {
+    "phash_string": True, "h_true": True, "w_string": True,
+    "truncated": True, "phash_nan": True, "duplicate_w": True,
+    "caption_null": False,  # null mixes with any kind: parsed, invalid
+    "w_float": False,       # 64.0-style integer: parsed, valid
+}
+
+
+def _image_rows(rng: random.Random, n: int, defect_share: float):
+    rows, defects = [], []
+    for i in range(n):
+        d = {
+            "image_id": "img%012d" % i, "bytes": "QUJD",
+            "w": rng.randint(1, 65535), "h": rng.randint(1, 65535),
+            "fmt": rng.choice(["png", "jpeg", "webp"]),
+            "caption": "caption %d ñ" % i,
+            "phash": rng.randrange(2 ** 64),  # uint64: mostly > 2^53
+        }
+        kind = rng.choice(sorted(_IMAGE_DEFECTS)) if rng.random() < defect_share else None
+        if kind == "phash_string":
+            d["phash"] = str(d["phash"])
+        elif kind == "h_true":
+            d["h"] = True
+        elif kind == "w_string":
+            d["w"] = "12"
+        elif kind == "phash_nan":
+            d["phash"] = float("nan")
+        elif kind == "caption_null":
+            d["caption"] = None
+        elif kind == "w_float":
+            d["w"] = float(d["w"])
+        text = json.dumps(d, ensure_ascii=rng.random() < 0.5)
+        if kind == "truncated":
+            text = text[:rng.randint(1, len(text) - 1)]
+        elif kind == "duplicate_w":
+            text = '{"w": 7, ' + text[1:]
+        rows.append(text)
+        defects.append(kind)
+    return rows, defects
+
+
+def test_screen_sets_aside_only_unparseable_rows():
+    """2,000 image records with uint64 phash values and 5 % planted
+    mixed-kind / truncated / NaN / duplicate-key rows: pyarrow refuses the
+    batch as a whole, the screen still clears >= 90 % of the valid rows,
+    sets aside exactly the planted rows pyarrow cannot take, and every
+    set-aside row gets its exact walk verdict and issue."""
+    from jsonschema_jl_spark.gate.columnar import _screen_batch, plan_screen_conj
+    from jsonschema_jl_spark.operators.pipeline import IMAGES_GATE_SCHEMA
+
+    data = Schema(IMAGES_GATE_SCHEMA).data
+    plan = plan_screen_conj(data)
+    rows, defects = _image_rows(random.Random(2024), 2000, 0.05)
+    s = pd.Series(rows, dtype=object)
+    walk = _gate_rows(s, data, None)
+    walk_valid = walk["reason"].isna().to_numpy()
+
+    res = _screen_batch(s, plan)
+    assert res is not None
+    valid, invalid, parsed = res
+    assert not (valid & invalid).any()
+    assert walk_valid[valid].all() and not walk_valid[invalid].any()
+    assert valid.sum() >= 0.9 * walk_valid.sum(), (valid.sum(), walk_valid.sum())
+    planted = np.array([_IMAGE_DEFECTS.get(k, False) for k in defects])
+    assert planted.sum() >= 40
+    np.testing.assert_array_equal(~parsed, planted)
+    assert not (valid | invalid)[~parsed].any()  # set-aside rows walk
+
+    pd.testing.assert_frame_equal(_gate_rows(s, data, plan), walk)
+    fast = _gate_rows(s, data, plan, verdict_only=True)
+    np.testing.assert_array_equal(fast["reason"].isna().to_numpy(), walk_valid)
+
+
+def _walk_and_screen(schema: dict, docs: list):
+    data = Schema(schema).data
+    plan = plan_screen(data)
+    s = pd.Series(docs, dtype=object)
+    walk_valid = _gate_rows(s, data, None)["reason"].isna().to_numpy()
+    fast = _gate_rows(s, data, plan, verdict_only=True)
+    np.testing.assert_array_equal(fast["reason"].isna().to_numpy(), walk_valid)
+    return screen_batch(s, plan), walk_valid
+
+
+def test_type_only_integers_screen_at_any_magnitude():
+    """`type` alone reads the parsed column type, exact at any magnitude:
+    ints past 2^53 and past int64 (pyarrow reads those as double) screen;
+    the ±2^53 gate still refuses the batch under magnitude keywords."""
+    docs = [json.dumps({"k": v}) for v in
+            (2 ** 64 - 1, 2 ** 63, 2 ** 53 + 1, 5, -3, 2.5, 1e300, 7.0)]
+    for t in ("integer", ["integer", "null"], "number"):
+        masks, walk_valid = _walk_and_screen({"properties": {"k": {"type": t}}}, docs)
+        assert masks is not None, t
+        np.testing.assert_array_equal(masks[0], walk_valid)
+        np.testing.assert_array_equal(masks[1], ~walk_valid)
+    # non-finite floats parse (pyarrow takes NaN / Infinity) and fail
+    # `type: integer` exactly as in the walk
+    docs = ['{"k": Infinity}', '{"k": -Infinity}', '{"k": NaN}', '{"k": 1}']
+    masks, walk_valid = _walk_and_screen({"properties": {"k": {"type": "integer"}}}, docs)
+    assert walk_valid.tolist() == [False, False, False, True]
+    assert masks is not None and masks[0].tolist() == walk_valid.tolist()
+    # magnitude keywords compare through float64: 2^53 + 1 reads as 2^53
+    for sub in ({"type": "integer", "maximum": 2 ** 53},
+                {"enum": [2 ** 53]}, {"anyOf": [{"maximum": 2 ** 53}]}):
+        masks, walk_valid = _walk_and_screen(
+            {"properties": {"k": sub}}, [json.dumps({"k": 2 ** 53 + 1})] * 3
+        )
+        assert not walk_valid.any()
+        assert masks is None or not masks[0].any(), sub
+
+
+def test_numeric_enum_and_unique_items_corner_values():
+    """Equality corners the walk decides by json_equal / float keys: 0 and
+    -0.0 are one enum value; a null element and a NaN element differ; ints
+    beyond 2^53 are unique exactly where their float64 values are."""
+    masks, walk_valid = _walk_and_screen(
+        {"properties": {"n": {"enum": [-0.0]}}},
+        ['{"n": 0}', '{"n": -0.0}', '{"n": 0.0}', '{"n": 1}'],
+    )
+    assert walk_valid.tolist() == [True, True, True, False]
+    assert masks is not None and masks[0].tolist() == walk_valid.tolist()
+    docs = ['{"a": [null, NaN]}', '{"a": [NaN, NaN]}', '{"a": [null, null, 1.5]}',
+            '{"a": [1.5, 2.5]}']
+    masks, walk_valid = _walk_and_screen(
+        {"properties": {"a": {"type": "array", "uniqueItems": True}}}, docs
+    )
+    assert walk_valid.tolist() == [True, False, False, True]
+    assert masks is None or walk_valid[masks[0]].all()
+    docs = [json.dumps({"a": v}) for v in
+            ([2 ** 53, 2 ** 53 + 1], [2 ** 60, 2 ** 60 + 2 ** 10], [1, 2])]
+    masks, walk_valid = _walk_and_screen(
+        {"properties": {"a": {"type": "array", "uniqueItems": True}}}, docs
+    )
+    assert walk_valid.tolist() == [False, True, True]
+    assert masks is not None
+    np.testing.assert_array_equal(masks[0], walk_valid)
+    np.testing.assert_array_equal(masks[1], ~walk_valid)
